@@ -4,8 +4,8 @@ The base tables mimic the engine's fixture schemas (``events``, ``orders``,
 ``documents``, ``embeddings``) and are generated once from a fixed seed, so
 every run measures the same amount of work.  The workload seed then derives
 what a run sees from the base: the report draws (``workloads.py``), a
-Caesar-shifted corpus for ``llm_dedup`` and a row order of ``events`` for
-``stream_state``.
+Caesar-shifted corpus and a row order of ``events`` for
+``dedup_stream``.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ TABLES = ("events", "orders", "documents", "embeddings")
 
 #: Rows per table.  Events and orders are the sf0.01 fixture sizes; the
 #: corpus and embeddings match them too.  Larger inputs do not fit the run
-#: budget: one cold pass of the ``llm_dedup`` chain alone is ~30 s on
+#: budget: one cold pass of the dedup chain alone is ~30 s on
 #: 4 cores at this size, almost all of it per-plan fixed cost.
 SIZES = {"events": 10_000, "users": 150, "orders": 15_000, "customers": 1_500,
          "documents": 500, "embeddings": 500}

@@ -5,6 +5,12 @@ grammar is limited to what the SQL twin can express exactly: dimensions,
 metric specs (``count``, ``sum:``, ``avg:``, ``users:``, ``ratio:``,
 ``min:``, ``max:``), a GA filter DSL string, a date range, a total sort,
 limit/offset, and sometimes a segment, totals or a pivot.
+
+The traffic mix is assumed, not measured: no GA session traces are
+available to draw it from.  The assumptions are the constants below, the
+equal mix of ``CLASSES``, and the repeat share ``workloads.GA_REPEAT_SHARE``.
+A gain that depends on how often reports repeat or on which shapes are
+common should be read against them.
 """
 
 from __future__ import annotations
@@ -17,6 +23,11 @@ EVENTS_DIMS = ("event_type", "day", "user_id")
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 ORDERS_DIMS = ("o_orderstatus", "o_orderpriority")
 DAY_SQL = "strftime(date_trunc('day', ts), '%Y-%m-%d')"
+#: Assumed shares of draws with no filter, with a limit, and of limited
+#: draws with an offset.
+UNFILTERED_SHARE = 0.2
+LIMITED_SHARE = 0.6
+OFFSET_SHARE = 0.3
 
 
 @dataclass(frozen=True)
@@ -58,7 +69,7 @@ def _order_condition(rng: random.Random) -> str:
 
 
 def _filters(rng: random.Random, condition) -> str | None:
-    if rng.random() < 0.2:
+    if rng.random() < UNFILTERED_SHARE:
         return None
     groups = [",".join(condition(rng) for _ in range(rng.randint(1, 2)))
               for _ in range(rng.randint(1, 2))]
@@ -80,8 +91,8 @@ def _events_range(rng: random.Random) -> tuple[str, str]:
 
 def _sorted(rng: random.Random, d: Draw) -> Draw:
     """Total sort (first metric, then every dimension) and pagination."""
-    limit = rng.randint(5, 50) if rng.random() < 0.6 else None
-    offset = rng.randint(1, 5) if limit and rng.random() < 0.3 else 0
+    limit = rng.randint(5, 50) if rng.random() < LIMITED_SHARE else None
+    offset = rng.randint(1, 5) if limit and rng.random() < OFFSET_SHARE else 0
     return Draw(**{**d.__dict__, "sort": (f"-{d.metrics[0][0]}", *d.dims),
                    "limit": limit, "offset": offset})
 
@@ -106,9 +117,12 @@ def _segment(rng: random.Random) -> Draw:
 
 
 def _totals(rng: random.Random) -> Draw:
+    """No filter, only a date range, so the report always has rows: the
+    engine drops the grand-total row of a report whose filters match
+    nothing (see ``TOTALS_OVER_NO_ROWS``), and a workload op must not fail."""
     dims = tuple(rng.sample(("event_type", "user_id"), rng.randint(1, 2)))
     return Draw("events", dims, _events_metrics(rng, ("sessions", "count"), 1),
-                _filters(rng, _event_condition), _events_range(rng), totals=True)
+                None, _events_range(rng), totals=True)
 
 
 def _pivot(rng: random.Random) -> Draw:
@@ -130,9 +144,18 @@ def _orders(rng: random.Random) -> Draw:
                              (f"{year}-01-01", f"{year + rng.randint(1, 2)}-01-01")))
 
 
-#: Shape classes, cycled in this order.  The seed draws every argument
-#: within a class; the class mix, which sets how many exchange stages and
-#: jobs a report needs, is the same for every seed.
+#: A totals report whose filter matches no row.  The engine returns no
+#: rows for it; SQL grouping sets (the DuckDB twin) return one ``RESERVED_TOTAL`` row
+#: with zero counts.  Run untimed on every ``ga_reports`` run, so the
+#: defect shows in the run context until it is fixed.
+TOTALS_OVER_NO_ROWS = Draw("events", ("event_type",), (("sessions", "count"),),
+                           "event_type==none", ("2024-01-01", "2024-01-08"), totals=True)
+
+
+#: Shape classes, cycled in this order, so each is an assumed sixth of the
+#: traffic.  The seed draws every argument within a class; the class mix,
+#: which sets how many exchange stages and jobs a report needs, is the same
+#: for every seed.
 CLASSES = (_plain, _distinct_users, _segment, _totals, _pivot, _orders)
 
 

@@ -1,16 +1,19 @@
 #!/usr/bin/env python3
-"""Benchmark of the engine's three kinds of user (see BENCHMARK.json).
+"""Benchmark of the engine's report and data-engineering users (see BENCHMARK.json).
 
-    python3 perfbench/run.py --workload ga_reports --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload ga_reports --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  The run generates its inputs from the
 seed, times passes of its workload for about ``--seconds`` seconds, checks
 every output against DuckDB outside the timed path, and prints two JSON
 lines: the run context, then the result ``{"correct", "attempted",
 "failed", "metrics"}``.  ``--trace 0`` reports the end-to-end metrics,
-``--trace 1`` the per-layer ones.  Everything a run writes stays under
-``.perfbench_work/`` in the checkout; the run's own directory there is
-new for each run and removed at the end.
+``--trace 1`` the per-layer ones.  What the run writes goes under
+``.perfbench_work/`` in the checkout, in a directory that is new for each
+run and removed at the end.  The one exception is the engine's own
+per-process scratch (streaming checkpoints and state stores), which the
+engine puts on tmpfs when the host has it and removes when the process
+exits; the benchmark leaves it there, as that is where the engine runs.
 """
 
 from __future__ import annotations
@@ -65,7 +68,7 @@ def prepare_work_dir() -> tuple[str, dict]:
             removed += 1
     run_dir = os.path.join(WORK, f"run-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
-    for sub in ("tmp", "local", "scratch", "data"):
+    for sub in ("tmp", "local", "data"):
         os.makedirs(os.path.join(run_dir, sub))
     return run_dir, {"run_dir": "fresh", "dead_run_dirs_removed": removed}
 
@@ -101,16 +104,23 @@ def retained_heap_mb(jvm) -> float:
     left cached.  Python's collector runs first so py4j releases the JVM
     objects it still references; Spark's cleaner drops blocks and
     broadcasts only after a JVM collection has enqueued them, so it gets
-    time between collections.  Peak RSS (kept as context) follows the
-    collector's heap sizing and spreads too much between runs to gate on."""
+    time between collections, until two in a row each free less than
+    1 MB: a fixed three rounds left 10-20 MB of cleanable state in some
+    runs, and one quiet round can come before the cleaner's next release.
+    Peak RSS (kept as context) follows the collector's heap sizing and
+    spreads too much between runs to gate on."""
     import gc
 
     gc.collect()
-    for _ in range(3):
+    heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    readings = []
+    for _ in range(12):
         jvm.System.gc()
         time.sleep(0.5)
-    usage = jvm.java.lang.management.ManagementFactory.getMemoryMXBean().getHeapMemoryUsage()
-    return usage.getUsed() / 2**20
+        readings.append(heap.getHeapMemoryUsage().getUsed() / 2**20)
+        if len(readings) >= 3 and readings[-3] - readings[-1] < 1.0:
+            break
+    return readings[-1]
 
 
 class Ctx:
@@ -155,23 +165,24 @@ class Runner:
 
     def check(self, op, df=None) -> None:
         """Compare an op's rows with DuckDB (untimed).  ``df`` is the
-        DataFrame of the timed run when its rows are already materialized
-        (a stream sink); otherwise the op is built and run again, which
-        counts as one more attempt."""
-        from perfbench.check import compare
-
+        DataFrame the timed run built, collected here; without it the op is
+        built and run again, which counts as one more attempt."""
         if df is None:
             self.attempted += 1
         try:
-            got = (df if df is not None else op.build()).toPandas()
-            con = self.ctx.duck(op.sf_dir)
-            want = con.execute(op.expected(con)).fetchdf()
+            problems = self.differences(op, df)
         except Exception:
             self.fail(op.tag, traceback.format_exc(limit=3))
             return
-        problems = compare(got, want)
         if problems:
             self.fail(op.tag, "; ".join(problems))
+
+    def differences(self, op, df=None) -> list[str]:
+        from perfbench.check import compare
+
+        got = (df if df is not None else op.build()).toPandas()
+        con = self.ctx.duck(op.sf_dir)
+        return compare(got, con.execute(op.expected(con)).fetchdf())
 
     def warmup(self) -> None:
         checked, plain = self.wl.warmup_ops()
@@ -188,8 +199,9 @@ class Runner:
         """One timed pass: (wall seconds, [(tag, seconds)] per op, the ops
         that succeeded with their DataFrames)."""
         lat, done = [], []
+        ops = self.wl.pass_ops(i)  # writes the pass's inputs, untimed
         t0 = time.perf_counter()
-        for op in self.wl.pass_ops(i):
+        for op in ops:
             self.attempted += 1
             s = time.perf_counter()
             try:
@@ -205,42 +217,53 @@ class Runner:
         return time.perf_counter() - t0, lat, done
 
     def timed(self, seconds: float, tracer=None) -> dict:
-        """Passes until the next would end past ``seconds``.  With a
-        tracer, passes alternate untraced / traced, starting and ending
-        untraced, so the overhead estimate is not skewed by warming."""
+        """The workload's ``warm_passes``, run and checked but not timed,
+        then passes until the next would end past ``seconds``, and at least
+        two untraced ones, so ``pass_s`` is never a single sample.  With a
+        tracer, passes alternate untraced / traced, starting untraced, and
+        run at least until a traced pass has an untraced one after it."""
         plain, traced, lat = [], [], []
-        to_check: dict[str, object] = {}
+        to_check: dict[str, tuple] = {}
+
+        def checks(done) -> None:
+            for op, df in done:
+                if op.tag in self.wl.check_timed:
+                    self.check(op, df)
+                else:
+                    to_check.setdefault(op.tag, (op, df))
+
+        warm = self.wl.warm_passes
+        for i in range(warm):
+            checks(self.run_pass(i)[2])
         start = time.perf_counter()
-        i = 0
+        i = warm
         while True:
-            use = tracer if (tracer is not None and i % 2 == 1) else None
+            use = tracer if (tracer is not None and (i - warm) % 2 == 1) else None
             if use is not None:
                 use.install()
             try:
                 dt, op_lat, done = self.run_pass(i, use)
             finally:
                 if use is not None:
-                    use.collect()  # while the progress listener is still registered
+                    use.collect()  # while the listeners are still registered
                     use.uninstall()
             if use is None:
                 plain.append(dt)
                 lat.extend(op_lat)
             else:
                 traced.append(dt)
-            for op, df in done:
-                if self.wl.check_timed:
-                    self.check(op, df)
-                else:
-                    to_check.setdefault(op.tag, op)
+                for problem in use.account(op_lat):
+                    self.fail("trace", problem)
+            checks(done)
             i += 1
             elapsed = time.perf_counter() - start
-            if tracer is not None and (not traced or len(plain) < 2):
-                continue  # traced passes need untraced ones on both sides
+            if len(plain) < 2 or (tracer is not None and not traced):
+                continue
             if elapsed + median(plain + traced) > seconds:
                 break
-        for tag, op in to_check.items():
+        for tag, (op, df) in to_check.items():
             if tag not in self.wl.checked_in_warmup:
-                self.check(op)
+                self.check(op, df)
         return {"plain": plain, "traced": traced, "lat": lat}
 
 
@@ -295,10 +318,6 @@ def main(argv: list[str] | None = None) -> int:
         setup_s = time.perf_counter() - t0
         spark.sparkContext.setLogLevel("ERROR")
 
-        import google_analytics_dataframes_spark.io as io_mod
-
-        io_mod._SCRATCH_BASE = os.path.join(run_dir, "scratch")
-        cache_state["engine_scratch"] = ".perfbench_work/run-*/scratch"
         cache_state["engine_tmp_fixtures"] = ".perfbench_work/run-*/tmp"
 
         ctx = Ctx(spark, reg, base_dir, run_dir)
@@ -314,11 +333,26 @@ def main(argv: list[str] | None = None) -> int:
 
             tracer = Tracer(spark, cores)
         res = runner.timed(args.seconds, tracer)
+        # Known engine defects the workload steers around: run untimed and
+        # reported, not counted, so each run shows whether they still hold.
+        known_defects = {}
+        for name, op in wl.known_defects().items():
+            try:
+                known_defects[name] = "reproduced" if runner.differences(op) else "fixed"
+            except Exception as e:
+                known_defects[name] = f"raised {type(e).__name__}"
         t6 = time.perf_counter()
 
         import duckdb
         import pyspark
 
+        import google_analytics_dataframes_spark.io as io_mod
+
+        # The engine's own choice: a per-process dir, on tmpfs when the host
+        # has it, removed when the process exits.
+        scratch = io_mod._SCRATCH_BASE
+        cache_state["engine_scratch"] = (
+            scratch.replace(str(os.getpid()), "<pid>") if scratch else "unused")
         jvm = spark.sparkContext._jvm
         peak_rss = vm_hwm_mb("self") + vm_hwm_mb(jvm.ProcessHandle.current().pid())
         retained = retained_heap_mb(jvm)
@@ -331,10 +365,11 @@ def main(argv: list[str] | None = None) -> int:
             "confs": {**{k: spark.conf.get(k, None) for k in PLAN_CONFS},
                       **{k: sc_conf.get(k, None) for k in STATIC_CONFS}},
             "cache_state": cache_state,
-            "passes": {"untraced": len(res["plain"]), "traced": len(res["traced"])},
+            "pass_times_s": {"untraced": res["plain"], "traced": res["traced"]},
             "peak_rss_mb": peak_rss,
             "phase_s": {"prepare": t4 - t3, "warmup": t5 - t4, "timed_and_checks": t6 - t5},
             "errors": runner.errors[:5],
+            "known_defects": known_defects,
         }
         from perfbench.stats import percentile, tail_percentile
 
@@ -354,7 +389,12 @@ def main(argv: list[str] | None = None) -> int:
             layer = tracer.layer_metrics(len(res["traced"]))
             layer["session.get_spark_ms"] = (t2 - t1) * 1000.0
             layer["registry.import_ms"] = (t3 - t2) * 1000.0
-            layer["trace.overhead_ms"] = (median(res["traced"]) - pass_s) * 1000.0
+            # Each traced pass against the untraced pass right after it: the
+            # first timed pass is still warming, so it is left out, and the
+            # estimate errs high rather than low.
+            plain, traced = res["plain"], res["traced"]
+            layer["trace.overhead_ms"] = median(
+                t - plain[k + 1] for k, t in enumerate(traced) if k + 1 < len(plain)) * 1000.0
             metrics = {k: {"value": layer.get(k, 0.0), "unit": u}
                        for k, (u, _moves) in LAYER_METRICS.items()}
             context["self_time_tolerance_pct"] = SELF_TIME_TOLERANCE_PCT

@@ -59,9 +59,50 @@ def test_layer_self_times_add_up_to_op_wall_time():
     op = Span("op", 0.0, 10.0)
     build = Span("build", 0.5, 4.0, [Span("io.load_table", 0.6, 0.9),
                                       Span("stream.batch", 1.0, 3.5)])
-    op.children = [build, Span("catalyst", 4.0, 4.5), Span("exec", 4.6, 9.8)]
+    op.children = [build, Span("exec", 4.0, 9.8, [Span("catalyst.optimization", 4.1, 4.5),
+                                                  Span("catalyst.planning", 4.5, 4.6)])]
     assert sum(s.self_s() for s in op.walk()) == pytest.approx(10.0)
     assert build.self_s() == pytest.approx(3.5 - 0.3 - 2.5)
+
+
+def _bare_tracer():
+    from types import SimpleNamespace
+
+    from perfbench.trace import Tracer
+
+    return Tracer(SimpleNamespace(sparkContext=None), cores=4)
+
+
+def test_jvm_spans_go_under_the_innermost_span_they_started_in():
+    from perfbench.trace import Span
+
+    tracer = _bare_tracer()
+    build = Span("build", 0.5, 4.0)
+    exec_ = Span("exec", 4.0, 9.0)
+    tracer.ops = [Span("op", 0.0, 10.0, [build, exec_])]
+    batch = Span("stream.batch", 1.0, 3.0)
+    in_batch = Span("catalyst.planning", 1.2, 1.8)
+    past_exec = Span("catalyst.optimization", 8.5, 9.5)
+    for ev in (batch, in_batch, past_exec, Span("catalyst.analysis", 2.0, 2.0),
+               Span("catalyst.planning", 11.0, 12.0)):
+        tracer._attach(ev)
+    assert build.children == [batch] and batch.children == [in_batch]
+    assert exec_.children == [past_exec] and past_exec.end == 9.0  # clipped
+    assert tracer.ops[0].children == [build, exec_]  # empty and outside spans dropped
+
+
+def test_accounting_flags_ops_whose_spans_miss_their_latency():
+    from perfbench.trace import SELF_TIME_TOLERANCE_PCT, Span
+
+    tracer = _bare_tracer()
+    tracer.ops = [Span("op", 0.0, 1.0, [Span("build", 0.0, 0.4), Span("exec", 0.4, 1.0)]),
+                  Span("op", 2.0, 2.5)]
+    slack = SELF_TIME_TOLERANCE_PCT / 100.0
+    bad = tracer.account([("a", 1.0 * (1 + slack / 2)), ("b", 0.5 * (1 + 2 * slack))])
+    assert len(bad) == 1 and bad[0].startswith("b: spans add up to 500.000 ms of ")
+    assert tracer.account([]) == []  # nothing new since the last pass
+    assert tracer.layer_metrics(1)["trace.unaccounted_pct"] == pytest.approx(
+        100 * (1 - 1 / (1 + 2 * slack)))
 
 
 # -- seeded corpus --------------------------------------------------------------
@@ -155,3 +196,50 @@ def test_twin_sql_runs_on_the_generated_tables(base_dir):
         else:
             assert cols[:len(d.dims)] == list(d.dims)
             assert all(re.fullmatch(r"\w+_\w+", c) for c in cols[len(d.dims):])
+
+
+def test_totals_draws_always_have_rows_and_the_defect_probe_has_none(base_dir):
+    """Totals draws carry no filter and a date range inside the events
+    span, so the engine's dropped grand-total row cannot fail a workload
+    op; the probe is the case the engine gets wrong, with an empty filter."""
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{os.path.join(base_dir, 'events.parquet')}')")
+
+    def detail_rows(d):
+        rows = con.execute(draws.twin_sql(d, con)).fetchall()
+        return [r for r in rows if r[0] != "RESERVED_TOTAL"]
+
+    for d in draws.session(13, 240, 0.3):
+        if d.totals:
+            assert d.filters is None and detail_rows(d)
+    assert detail_rows(draws.TOTALS_OVER_NO_ROWS) == []
+
+
+# -- timed loop -----------------------------------------------------------------
+
+@pytest.mark.parametrize("warm", [0, 1])
+def test_timed_runs_two_passes_at_least_and_checks_each_output_once(monkeypatch, warm):
+    from unittest.mock import MagicMock
+
+    import perfbench.run as run
+    from perfbench.workloads import Op
+
+    class Fake:
+        check_timed = frozenset({"stream"})
+        checked_in_warmup = frozenset({"row"})
+        warm_passes = warm
+
+        def pass_ops(self, i):
+            return [Op(tag, "dir", MagicMock, None) for tag in ("row", "stream", f"draw{i % 2}")]
+
+    checked = []
+    runner = run.Runner(None, Fake())
+    monkeypatch.setattr(runner, "check", lambda op, df=None: checked.append((op.tag, df)))
+    res = runner.timed(0.0)
+    assert len(res["plain"]) == 2 and len(res["lat"]) == 6
+    assert runner.attempted == 3 * (2 + warm)
+    # stream outputs from every pass; each other new tag once, from the
+    # DataFrame its pass built; warm-up-checked tags not again
+    assert [t for t, _ in checked] == ["stream"] * (2 + warm) + ["draw0", "draw1"]
+    assert all(df is not None for _, df in checked)

@@ -1,16 +1,23 @@
 """Spans and counters for the traced run.
 
 Every op is a root span with children ``build`` (the registry ``fn()`` or
-``report.report(...)`` call), ``catalyst`` (analysis, optimization and
-planning forced on the built plan) and ``exec`` (the noop write).  Calls
-into ``io`` and ``sources.bucketed`` made during the build are spans under
-``build``; streaming micro-batches, which an ``st*`` row drains inside its
-``fn()``, are attached under ``build`` by their time stamps.  Spark job,
-stage and task figures are read per op from the status store by job group,
-and micro-batch phases from a ``StreamingQueryListener``.
+``report.report(...)`` call) and ``exec`` (the noop write).  Calls into
+``io`` and ``sources.bucketed`` made during the build are spans under
+``build``.  Spans timed by the JVM are attached afterwards, by their time
+stamps, under the innermost span they started in:
 
-All of it is installed from outside the program: counting wrappers replace
-the public layer functions only while a traced pass runs.
+- ``catalyst.analysis``, ``catalyst.optimization`` and ``catalyst.planning``
+  of every query execution the op ran, read from its
+  ``QueryPlanningTracker`` by a ``QueryExecutionListener``.  The noop write
+  plans its own command, so its optimization and planning land under
+  ``exec``; the built DataFrame's analysis, done while building, lands
+  under ``build``.  Nothing is planned only for the trace.
+- ``stream.batch``: the micro-batches an ``st*`` row drains inside its
+  ``fn()``, from a ``StreamingQueryListener``.
+
+Spark job, stage and task figures are read per op from the status store by
+job group.  All of it is installed from outside the program: counting
+wrappers replace the public layer functions only while a traced pass runs.
 """
 
 from __future__ import annotations
@@ -42,43 +49,46 @@ LAYER_METRICS = {
     "build.ms": ("ms", "op_p50_ms on ga_reports"),
     "build.jobs": ("count", "op_p50_ms on ga_reports"),
     "io.load_table.calls": ("count", "op_p50_ms on ga_reports"),
-    "io.load_table.ms": ("ms", "op_p50_ms on ga_reports; pass_s on llm_dedup"),
-    "io.staged_dir.builds": ("count", "pass_s on llm_dedup"),
-    "io.staged_dir.ms": ("ms", "pass_s on llm_dedup"),
-    "catalyst.ms": ("ms", "op_p50_ms on ga_reports"),
+    "io.load_table.ms": ("ms", "op_p50_ms on ga_reports; pass_s on dedup_stream"),
+    "io.staged_dir.builds": ("count", "pass_s on dedup_stream"),
+    "io.staged_dir.ms": ("ms", "pass_s on dedup_stream"),
+    "catalyst.ms": ("ms", "op_p50_ms on ga_reports; pass_s on dedup_stream"),
     "catalyst.analysis_ms": ("ms", "op_p50_ms on ga_reports"),
     "catalyst.optimization_ms": ("ms", "op_p50_ms on ga_reports"),
     "catalyst.planning_ms": ("ms", "op_p50_ms on ga_reports"),
-    "exec.ms": ("ms", "pass_s and items_per_s on llm_dedup; op_p50_ms on ga_reports"),
+    "exec.ms": ("ms", "pass_s and items_per_s on dedup_stream; op_p50_ms on ga_reports"),
     "exec.jobs": ("count", "op_p50_ms on ga_reports"),
     "exec.stages": ("count", "op_p50_ms on ga_reports"),
-    "exec.tasks": ("count", "pass_s on llm_dedup"),
+    "exec.tasks": ("count", "pass_s on dedup_stream"),
     "exec.failed_tasks": ("count", "pass_s on all workloads"),
-    "exec.executor_run_ms": ("ms", "pass_s and items_per_s on llm_dedup"),
+    "exec.executor_run_ms": ("ms", "pass_s and items_per_s on dedup_stream"),
     "exec.gc_ms": ("ms", "pass_s on ga_reports"),
-    "exec.shuffle_read_bytes": ("bytes", "pass_s on llm_dedup"),
-    "exec.shuffle_write_bytes": ("bytes", "pass_s on llm_dedup"),
-    "exec.input_bytes": ("bytes", "pass_s on llm_dedup"),
-    "exec.core_busy_ratio": ("ratio", "items_per_s on llm_dedup"),
-    "bucketed.builds": ("count", "pass_s on llm_dedup; none on ga_reports"),
-    "bucketed.build_ms": ("ms", "pass_s on llm_dedup; none on ga_reports"),
-    "bucketed.hits": ("count", "pass_s on llm_dedup; none on ga_reports"),
-    "stream.batches": ("count", "pass_s and items_per_s on stream_state"),
-    "stream.batch_ms": ("ms", "pass_s and items_per_s on stream_state"),
-    "stream.query_planning_ms": ("ms", "pass_s on stream_state"),
-    "stream.add_batch_ms": ("ms", "pass_s on stream_state"),
-    "stream.wal_commit_ms": ("ms", "pass_s on stream_state"),
-    "stream.state_commit_ms": ("ms", "pass_s on stream_state"),
-    "stream.state_rows": ("count", "retained_heap_mb on stream_state"),
-    "stream.state_memory_bytes": ("bytes", "retained_heap_mb on stream_state"),
-    "stream.input_rows": ("count", "items_per_s on stream_state"),
-    "trace.overhead_ms": ("ms", "none: traced minus untraced pass time"),
-    "trace.unaccounted_pct": ("%", "none: layer self times vs op wall time"),
+    "exec.shuffle_read_bytes": ("bytes", "pass_s on dedup_stream"),
+    "exec.shuffle_write_bytes": ("bytes", "pass_s on dedup_stream"),
+    "exec.input_bytes": ("bytes", "pass_s on dedup_stream"),
+    "exec.core_busy_ratio": ("ratio", "items_per_s on dedup_stream"),
+    "bucketed.builds": ("count", "pass_s on dedup_stream; none on ga_reports"),
+    "bucketed.build_ms": ("ms", "pass_s on dedup_stream; none on ga_reports"),
+    "bucketed.hits": ("count", "pass_s on dedup_stream; none on ga_reports"),
+    "stream.batches": ("count", "pass_s and items_per_s on dedup_stream"),
+    "stream.batch_ms": ("ms", "pass_s and items_per_s on dedup_stream"),
+    "stream.query_planning_ms": ("ms", "pass_s on dedup_stream"),
+    "stream.add_batch_ms": ("ms", "pass_s on dedup_stream"),
+    "stream.wal_commit_ms": ("ms", "pass_s on dedup_stream"),
+    "stream.state_commit_ms": ("ms", "pass_s on dedup_stream"),
+    "stream.state_rows": ("count", "retained_heap_mb on dedup_stream"),
+    "stream.state_memory_bytes": ("bytes", "retained_heap_mb on dedup_stream"),
+    "stream.input_rows": ("count", "items_per_s on dedup_stream"),
+    "trace.overhead_ms": ("ms", "none: traced pass minus the untraced pass after it"),
+    "trace.unaccounted_pct": ("%", "none: worst op's gap between its spans and its latency"),
 }
 
-#: Largest allowed gap between the sum of layer self times and op wall
-#: time, as a share of wall time.
+#: Largest allowed gap, per op, between the sum of the self times of its
+#: span tree and its latency as the runner measures it, as a share of that
+#: latency.  A larger gap fails the run.
 SELF_TIME_TOLERANCE_PCT = 1.0
+
+CATALYST_PHASES = ("analysis", "optimization", "planning")
 
 
 @dataclass
@@ -99,7 +109,9 @@ class Span:
 
 
 class Tracer:
-    """Collects spans and counts of the traced passes of one run."""
+    """Collects spans and counts of the traced passes of one run.  Spans
+    are timed with ``time.perf_counter``, the clock the runner times ops
+    with; JVM time stamps (Unix milliseconds) are converted to it."""
 
     def __init__(self, spark, cores: int):
         self.spark = spark
@@ -107,52 +119,90 @@ class Tracer:
         self.cores = cores
         self.counts: Counter = Counter()
         self.ops: list[Span] = []
+        #: (op tag, latency as the runner measured it, span tree total), s
+        self.accounting: list[tuple[str, float, float]] = []
         self._stack: list[Span] = []
         self._groups: list[tuple[str, str]] = []  # (job group, layer)
-        self._progress: list[dict] = []
+        self._seq = 0
+        self._built: list[object] = []  # DataFrames built by the ops
+        self._jvm_spans: list[Span] = []
+        self._phases_seen: set[tuple[int, str, int]] = set()
         self._lock = threading.Lock()
         self._saved: list[tuple[object, str, object]] = []
-        self._listener = None
+        self._listeners: tuple = ()
+        self._unix_offset = time.time() - time.perf_counter()
+
+    def _from_unix(self, seconds: float) -> float:
+        return seconds - self._unix_offset
 
     # -- spans -----------------------------------------------------------
     @contextmanager
     def span(self, name: str, detail: str = ""):
-        s = Span(name, time.time(), detail=detail)
+        s = Span(name, time.perf_counter(), detail=detail)
         if self._stack:
             self._stack[-1].children.append(s)
         self._stack.append(s)
         try:
             yield s
         finally:
-            s.end = time.time()
+            s.end = time.perf_counter()
             self._stack.pop()
             if not self._stack:
                 self.ops.append(s)
 
     def job_group(self, op_tag: str, layer: str) -> None:
-        group = f"perfbench:{op_tag}:{layer}"
+        group = f"perfbench:{self._seq}:{op_tag}:{layer}"
         self.sc.setJobGroup(group, group)
         self._groups.append((group, layer))
 
     def run_op(self, op_tag: str, build, sink) -> object:
         """Run one op (``build()`` then ``sink(df)``) under root span
         ``op``; returns the built DataFrame."""
+        self._seq += 1
         with self.span("op", op_tag):
             self.job_group(op_tag, "build")
             with self.span("build"):
                 df = build()
-            with self.span("catalyst"):
-                qe = df._jdf.queryExecution()
-                qe.executedPlan()
-                phases = qe.tracker().phases()
-                for k in ("analysis", "optimization", "planning"):
-                    if phases.contains(k):
-                        self.counts[f"catalyst.{k}_ms"] += phases.apply(k).durationMs()
             self.job_group(op_tag, "exec")
             with self.span("exec"):
                 sink(df)
-        self.sc.setJobGroup("perfbench:idle", "perfbench:idle")
+            self.sc.setJobGroup("perfbench:idle", "perfbench:idle")
+        self._built.append(df)
         return df
+
+    def _attach(self, ev: Span) -> None:
+        """Put a JVM-timed span under the innermost span it started in,
+        clipped to it; spans outside every op, and empty ones (phases
+        under a millisecond), are dropped."""
+        if ev.end <= ev.start:
+            return
+        parent, level = None, self.ops
+        while True:
+            inner = next((s for s in level if s.start <= ev.start < s.end), None)
+            if inner is None:
+                break
+            parent, level = inner, inner.children
+        if parent is not None:
+            ev.end = min(ev.end, parent.end)
+            parent.children.append(ev)
+
+    def _record_phases(self, qe) -> None:
+        """Catalyst phase spans of one query execution, once each."""
+        qe_id = qe.hashCode()
+        phases = qe.tracker().phases()
+        for name in CATALYST_PHASES:
+            if not phases.contains(name):
+                continue
+            p = phases.apply(name)
+            key = (qe_id, name, p.startTimeMs())
+            with self._lock:
+                if key in self._phases_seen:
+                    continue
+                self._phases_seen.add(key)
+            span = Span(f"catalyst.{name}", self._from_unix(p.startTimeMs() / 1000.0),
+                        self._from_unix(p.endTimeMs() / 1000.0))
+            with self._lock:
+                self._jvm_spans.append(span)
 
     # -- layer wrappers --------------------------------------------------
     def _timed_wrapper(self, fn, layer: str, on_call=None):
@@ -203,6 +253,7 @@ class Tracer:
     def install(self) -> None:
         import google_analytics_dataframes_spark.io as io_mod
         import google_analytics_dataframes_spark.sources.bucketed as bucketed
+        from pyspark.java_gateway import ensure_callback_server_started
         from pyspark.sql.readwriter import DataFrameWriter
         from pyspark.sql.streaming import StreamingQueryListener
 
@@ -230,8 +281,7 @@ class Tracer:
                 pass
 
             def onQueryProgress(self, event):
-                with tracer._lock:
-                    tracer._progress.append(json.loads(event.progress.json))
+                tracer._stream_progress(json.loads(event.progress.json))
 
             def onQueryIdle(self, event):
                 pass
@@ -239,34 +289,72 @@ class Tracer:
             def onQueryTerminated(self, event):
                 pass
 
-        self._listener = Progress()
-        self.spark.streams.addListener(self._listener)
+        class PlanPhases:
+            """A ``QueryExecutionListener``, called back from the JVM when
+            a query execution has run."""
+
+            def onSuccess(self, func_name, qe, duration_ns):
+                tracer._record_phases(qe)
+
+            def onFailure(self, func_name, qe, exception):
+                tracer._record_phases(qe)
+
+            class Java:
+                implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+        ensure_callback_server_started(self.sc._gateway)
+        progress, phases = Progress(), PlanPhases()
+        self.spark.streams.addListener(progress)
+        self.spark._jsparkSession.listenerManager().register(phases)
+        self._listeners = (progress, phases)
 
     def uninstall(self) -> None:
         for mod, attr, original in reversed(self._saved):
             setattr(mod, attr, original)
         self._saved.clear()
-        if self._listener is not None:
-            self.spark.streams.removeListener(self._listener)
-            self._listener = None
+        if self._listeners:
+            progress, phases = self._listeners
+            self.spark.streams.removeListener(progress)
+            self.spark._jsparkSession.listenerManager().unregister(phases)
+            self._listeners = ()
 
     # -- collection ------------------------------------------------------
+    def _stream_progress(self, p: dict) -> None:
+        d = p.get("durationMs") or {}
+        start = datetime.fromisoformat(p["timestamp"].replace("Z", "+00:00")).timestamp()
+        with self._lock:
+            self.counts["stream.batches"] += 1
+            self.counts["stream.input_rows"] += p.get("numInputRows") or 0
+            self.counts["stream.query_planning_ms"] += d.get("queryPlanning", 0)
+            self.counts["stream.add_batch_ms"] += d.get("addBatch", 0)
+            self.counts["stream.wal_commit_ms"] += d.get("walCommit", 0) + d.get("commitOffsets", 0)
+            for so in p.get("stateOperators") or []:
+                self.counts["stream.state_commit_ms"] += so.get("commitTimeMs") or 0
+                self.counts["stream.state_rows"] += so.get("numRowsTotal") or 0
+                self.counts["stream.state_memory_bytes"] += so.get("memoryUsedBytes") or 0
+            self._jvm_spans.append(Span(
+                "stream.batch", self._from_unix(start),
+                self._from_unix(start + d.get("triggerExecution", 0) / 1000.0)))
+
     def settle(self) -> None:
         """Wait until Spark's listener bus has delivered the events of the
-        ops run so far, so the status store and the progress list are
+        ops run so far, so the status store and the JVM-timed spans are
         complete."""
         self.sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
         seen, quiet_since = -1, time.time()
         while time.time() - quiet_since < 0.3:
             with self._lock:
-                n = len(self._progress)
+                n = len(self._jvm_spans)
             if n != seen:
                 seen, quiet_since = n, time.time()
             time.sleep(0.05)
 
     def collect(self) -> None:
-        """Fold job-group stage data and stream progress into the counts,
-        and attach micro-batch spans to the build span they ran in."""
+        """Fold job-group stage data into the counts, and attach the
+        JVM-timed spans to the ops they ran in."""
+        for df in self._built:
+            self._record_phases(df._jdf.queryExecution())
+        self._built.clear()
         self.settle()
         tracker = self.sc.statusTracker()
         store = self.sc._jsc.sc().statusStore()
@@ -295,54 +383,56 @@ class Tracer:
         self._groups.clear()
 
         with self._lock:
-            progress, self._progress = self._progress, []
-        builds = [s for op in self.ops for s in op.children if s.name == "build"]
-        for p in progress:
-            d = p.get("durationMs") or {}
-            start = datetime.fromisoformat(p["timestamp"].replace("Z", "+00:00")).timestamp()
-            end = start + d.get("triggerExecution", 0) / 1000.0
-            self.counts["stream.batches"] += 1
-            self.counts["stream.input_rows"] += p.get("numInputRows") or 0
-            self.counts["stream.query_planning_ms"] += d.get("queryPlanning", 0)
-            self.counts["stream.add_batch_ms"] += d.get("addBatch", 0)
-            self.counts["stream.wal_commit_ms"] += d.get("walCommit", 0) + d.get("commitOffsets", 0)
-            for so in p.get("stateOperators") or []:
-                self.counts["stream.state_commit_ms"] += so.get("commitTimeMs") or 0
-                self.counts["stream.state_rows"] += so.get("numRowsTotal") or 0
-                self.counts["stream.state_memory_bytes"] += so.get("memoryUsedBytes") or 0
-            owner = next((b for b in builds if b.start <= start <= b.end), None)
-            if owner is not None:
-                owner.children.append(Span("stream.batch", start, min(end, owner.end)))
+            events, self._jvm_spans = self._jvm_spans, []
+        # a micro-batch goes in before the planning phases it contains
+        for ev in sorted(events, key=lambda s: (s.start, s.start - s.end)):
+            self._attach(ev)
+
+    def account(self, latencies: list[tuple[str, float]]) -> list[str]:
+        """Compare each op of the pass just collected with its latency as
+        the runner measured it (``latencies``, in op order).  Returns the
+        ops whose span tree misses it by more than the tolerance."""
+        ops = self.ops[len(self.accounting):]
+        if len(ops) != len(latencies):
+            return [f"{len(ops)} op spans for {len(latencies)} ops"]
+        bad = []
+        for op, (tag, wall) in zip(ops, latencies):
+            total = sum(s.self_s() for s in op.walk())
+            self.accounting.append((tag, wall, total))
+            if abs(wall - total) > wall * SELF_TIME_TOLERANCE_PCT / 100.0:
+                bad.append(f"{tag}: spans add up to {total * 1e3:.3f} ms "
+                           f"of {wall * 1e3:.3f} ms")
+        return bad
 
     def layer_metrics(self, n_passes: int) -> dict[str, float]:
         """Per-pass layer metrics: span self times and counts over the
         traced passes, divided by their number."""
         totals: Counter = Counter()
-        wall = accounted = 0.0
         for op in self.ops:
-            wall += op.end - op.start
             for s in op.walk():
-                key = "op.self_ms" if s is op else f"{s.name}.self_ms"
+                key = "op" if s is op else s.name
                 totals[key] += s.self_s() * 1000.0
-                accounted += s.self_s()
         out = {
-            "op.self_ms": totals["op.self_ms"],
-            "build.ms": totals["build.self_ms"],
-            "catalyst.ms": totals["catalyst.self_ms"],
-            "exec.ms": totals["exec.self_ms"],
-            "stream.batch_ms": totals["stream.batch.self_ms"],
+            "op.self_ms": totals["op"],
+            "build.ms": totals["build"],
+            "exec.ms": totals["exec"],
+            "stream.batch_ms": totals["stream.batch"],
+            "io.load_table.ms": totals["io.load_table"],
+            "io.staged_dir.ms": totals["io.staged_dir"],
+            "catalyst.ms": sum(totals[f"catalyst.{p}"] for p in CATALYST_PHASES),
         }
+        for p in CATALYST_PHASES:
+            out[f"catalyst.{p}_ms"] = totals[f"catalyst.{p}"]
         for name in LAYER_METRICS:
             if name not in out and name in self.counts:
                 out[name] = float(self.counts[name])
-        out["io.load_table.ms"] = totals["io.load_table.self_ms"]
-        out["io.staged_dir.ms"] = totals["io.staged_dir.self_ms"]
         exec_ms = out["exec.ms"]
         busy = self.counts["exec.executor_run_ms"]
-        out["exec.core_busy_ratio"] = busy / (exec_ms * self.cores) if exec_ms else 0.0
         per_pass = {k: v / max(n_passes, 1) for k, v in out.items()}
-        per_pass["exec.core_busy_ratio"] = out["exec.core_busy_ratio"]
-        per_pass["trace.unaccounted_pct"] = abs(wall - accounted) / wall * 100.0 if wall else 0.0
+        per_pass["exec.core_busy_ratio"] = busy / (exec_ms * self.cores) if exec_ms else 0.0
+        per_pass["trace.unaccounted_pct"] = max(
+            (abs(wall - total) / wall * 100.0 for _tag, wall, total in self.accounting if wall),
+            default=0.0)
         return per_pass
 
     def spans_json(self) -> list[dict]:
