@@ -53,7 +53,18 @@ from google_analytics_dataframes_spark.registry import registry as _registry
 # registry.ordered_by_priority), eliminating prefix-collision care.
 SWEEP_HEAD: list[str] = [
     # generated: tools/stale_evidence.py --emit-head 50 14
-    # 22 stale/changed rows lead; oldest-evidence back-fill to 50
+    # 44 stale/changed rows lead; oldest-evidence back-fill to 50
+    "st15_stream_content_dedup",
+    "st9_stream_interval_join",
+    "st16_stream_outer_join",
+    "st17_stream_restart_resume",
+    "st12_stream_stateful_funnel",
+    "st18_stream_typed_state",
+    "st19_stream_timer_sessions",
+    "st13_stream_windowed_agg",
+    "st11_stream_dedup",
+    "st14_stream_sessionize",
+    "st21_stream_late_drop",
     "l2_near_dedup_minhash",
     "l12_ngram_jaccard",
     "l73_triangle_count",
@@ -76,34 +87,23 @@ SWEEP_HEAD: list[str] = [
     "l60_incremental_neardup",
     "l60b_neardup_slice",
     "l55b_pair_token_f1_slice",
+    "rb1_report_events",
+    "rb2_report_orders",
+    "rb3_segment_users",
+    "rb6_channel_having",
+    "rb8_pivot_report",
+    "rb9_ratio_metric",
+    "rb12_report_totals",
+    "rb14_keep_empty_rows",
+    "rb15_histogram_buckets",
+    "rb16_report_minmax",
+    "rb17_filter_expression",
     "s13_zorder_scan",
     "s14_python_datasource",
     "s15_schema_evolution",
     "s16_corrupt_records",
     "s17_footer_stats",
     "s18_manifest_pruned_read",
-    "s19_python_datasource_writer",
-    "a19_moment_stats",
-    "a20_bool_aggs",
-    "j15_nullsafe_join",
-    "w12_gapfill_interpolate",
-    "w13_nth_value",
-    "w14_cume_dist",
-    "sf15_variant",
-    "sf16_collation",
-    "sf17_unpivot",
-    "sf18_bitwise",
-    "sf19_timezone_render",
-    "st17_stream_restart_resume",
-    "st13_stream_windowed_agg",
-    "st20_stream_cdc_apply",
-    "st21_stream_late_drop",
-    "ud7_arrow_udf",
-    "ud8_mapinarrow",
-    "l76_priority_sample",
-    "l66_corpus_delta",
-    "l71_merge_upsert",
-    "l77_bpe_encode_roundtrip",
 ]
 
 #: Evidence horizon SWEEP_HEAD was generated from (the newest
@@ -116,6 +116,15 @@ SWEEP_HEAD_HORIZON = 14
 # (the r05-evidence cohort — generated as --emit-head 85's entries 51-84;
 # only reached if the driver budget exceeds 50).
 SWEEP_ROTATION: list[str] = [
+    # rows the 50-cut displaced when the report rows (empty-match totals
+    # fix) and the stateful-stream rows (state-partition slot floor)
+    # turned stale — they lead the back-fill after the head
+    "s19_python_datasource_writer", "a19_moment_stats", "a20_bool_aggs",
+    "j15_nullsafe_join", "w12_gapfill_interpolate", "w13_nth_value",
+    "w14_cume_dist", "sf15_variant", "sf16_collation", "sf17_unpivot",
+    "sf18_bitwise", "sf19_timezone_render", "st20_stream_cdc_apply",
+    "ud7_arrow_udf", "ud8_mapinarrow", "l76_priority_sample",
+    "l66_corpus_delta", "l71_merge_upsert", "l77_bpe_encode_roundtrip",
     # the 5 r4-evidence rows the 50-cut displaced when st14/st16/l4/l68/
     # l26 turned stale in r11 — they lead the r12 back-fill mechanically,
     # and a >50 driver budget still reaches them here first

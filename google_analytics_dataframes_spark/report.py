@@ -384,8 +384,27 @@ def report(
     elif agg_kinds:
         names = list(dimensions)
         if "total" in agg_kinds:
-            grouped = out.groupingSets([list(names), []], *names).agg(
-                *aggs, F.grouping_id().alias("_gid")
+            # SQL grouping sets emit the () row even when no row matches;
+            # Spark's Expand emits no group for an empty input.  One
+            # all-NULL sentinel row (``_real`` NULL) unioned under the
+            # Expand keeps the () group non-empty without a second fact
+            # scan; counts read ``_real`` and every other metric skips
+            # NULLs, so the sentinel adds nothing, and a detail group that
+            # only the sentinel formed is dropped.
+            sentinel = out.sparkSession.range(1, numPartitions=1).select(
+                F.lit(None).cast("boolean").alias("_real")
+            )
+            src = out.withColumn("_real", F.lit(True)).unionByName(
+                sentinel, allowMissingColumns=True
+            )
+            aggs = [
+                F.count("_real").alias(n) if s == "count" else _metric(n, s)
+                for n, s in metrics.items()
+            ]
+            grouped = (
+                src.groupingSets([list(names), []], *names)
+                .agg(*aggs, F.count("_real").alias("_n"), F.grouping_id().alias("_gid"))
+                .filter((F.col("_gid") > 0) | (F.col("_n") > 0))
             )
         else:
             grouped = out.groupBy(*names).agg(*aggs).withColumn(

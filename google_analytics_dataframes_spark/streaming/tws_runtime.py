@@ -131,13 +131,28 @@ def ensure_protobuf() -> bool:
 
 
 def _write_shim_dir() -> str:
-    """Write the sitecustomize shim into a per-process temp dir; idempotent."""
+    """Write the sitecustomize shim into a per-process temp dir, once.
+
+    Worker interpreters import the file at start, possibly while a later
+    TWS plan is being built, so it is never rewritten in place: the first
+    call writes a temp file and ``os.replace``s it in, and later calls
+    leave a file that already holds the current shim untouched."""
     import tempfile
 
     shim_dir = os.path.join(tempfile.gettempdir(), f"spark_graft_pbshim_{os.getpid()}")
+    path = os.path.join(shim_dir, "sitecustomize.py")
+    src = SITECUSTOMIZE_SRC.format(dirs=_candidate_dirs())
+    try:
+        with open(path) as f:
+            if f.read() == src:
+                return shim_dir
+    except FileNotFoundError:
+        pass
     os.makedirs(shim_dir, exist_ok=True)
-    with open(os.path.join(shim_dir, "sitecustomize.py"), "w") as f:
-        f.write(SITECUSTOMIZE_SRC.format(dirs=_candidate_dirs()))
+    fd, tmp = tempfile.mkstemp(dir=shim_dir, prefix=".sitecustomize.", suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        f.write(src)
+    os.replace(tmp, path)
     return shim_dir
 
 

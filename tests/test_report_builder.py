@@ -292,6 +292,31 @@ def test_totals_appends_reserved_total_row(spark):
         report(ev, ["event_type"], {"n": "count"}, totals=True, pivot=("event_type", 2))
 
 
+def test_totals_over_no_matching_rows_keeps_total_row(spark):
+    """A totals report whose filters match nothing still returns the one
+    RESERVED_TOTAL row, as SQL grouping sets do: count-type metrics are 0,
+    the others NULL.  Rows with NULL dimensions keep their own detail row
+    next to the total."""
+    ev = load_table(spark, SF_DIR, "events")
+    metrics = {"sessions": "count", "users": "users:user_id", "total_value": "sum:value"}
+    for dims in (["event_type"], ["event_type", "user_id"]):
+        rows = report(
+            ev, dims, metrics, filters="event_type==none", totals=True
+        ).collect()
+        assert len(rows) == 1, rows
+        r = rows[0].asDict()
+        assert all(r[d] == "RESERVED_TOTAL" for d in dims), r
+        assert (r["sessions"], r["users"], r["total_value"]) == (0, 0, None), r
+    df = spark.createDataFrame(
+        [(None, 1.0), (None, 2.0), ("a", 4.0)], "k string, v double"
+    )
+    got = {
+        r.k: (r.n, r.s)
+        for r in report(df, ["k"], {"n": "count", "s": "sum:v"}, totals=True).collect()
+    }
+    assert got == {None: (2, 3.0), "a": (1, 4.0), "RESERVED_TOTAL": (3, 7.0)}, got
+
+
 def test_histogram_dim_labels_and_ordinal(spark):
     import pytest as _pytest
 

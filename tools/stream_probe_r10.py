@@ -146,7 +146,10 @@ def main() -> None:
                     if legacy
                     else jobs.st18_typed_state_census(stream)
                 )
-            with _few_state_partitions(spark, _sized_state_partitions(SF_DIR)):
+            with _few_state_partitions(
+                spark,
+                _sized_state_partitions(SF_DIR, spark.sparkContext.defaultParallelism),
+            ):
                 out = jobs.run_available_now(
                     tws, f"probe18_{uuid.uuid4().hex[:8]}", output_mode="update"
                 )

@@ -84,7 +84,10 @@ def main() -> None:
         with _rocksdb_state_provider(spark):
             with armed_worker_env(spark):
                 tws = jobs.st18_typed_state_census(stream)
-            with _few_state_partitions(spark, _sized_state_partitions(SF_DIR)):
+            with _few_state_partitions(
+                spark,
+                _sized_state_partitions(SF_DIR, spark.sparkContext.defaultParallelism),
+            ):
                 out = jobs.run_available_now(
                     tws, f"p18_{uuid.uuid4().hex[:8]}", output_mode="update"
                 )
@@ -96,7 +99,10 @@ def main() -> None:
         with _rocksdb_state_provider(spark):
             with armed_worker_env(spark):
                 tws = jobs.st19_timer_sessionize(stream)
-            with _few_state_partitions(spark, _sized_state_partitions(SF_DIR)):
+            with _few_state_partitions(
+                spark,
+                _sized_state_partitions(SF_DIR, spark.sparkContext.defaultParallelism),
+            ):
                 out = jobs.run_available_now_parquet(
                     tws, f"p19_{uuid.uuid4().hex[:8]}"
                 )
