@@ -52,10 +52,11 @@ from google_analytics_dataframes_spark.registry import registry as _registry
 # Entries are FULL query names (exact match beats prefix in
 # registry.ordered_by_priority), eliminating prefix-collision care.
 SWEEP_HEAD: list[str] = [
-    # generated: tools/stale_evidence.py --emit-head 50 14
-    # 44 stale/changed rows lead; oldest-evidence back-fill to 50
+    # generated: tools/stale_evidence.py --emit-head 50 15
+    # 45 stale/changed rows lead; oldest-evidence back-fill to 50
     "st15_stream_content_dedup",
     "st9_stream_interval_join",
+    "st10_stream_static_enrich",
     "st16_stream_outer_join",
     "st17_stream_restart_resume",
     "st12_stream_stateful_funnel",
@@ -64,16 +65,14 @@ SWEEP_HEAD: list[str] = [
     "st13_stream_windowed_agg",
     "st11_stream_dedup",
     "st14_stream_sessionize",
+    "st20_stream_cdc_apply",
     "st21_stream_late_drop",
-    "l2_near_dedup_minhash",
     "l12_ngram_jaccard",
     "l73_triangle_count",
-    "l13_embed_neardup",
+    "l81_ann_ivf_stored",
     "l7_string_simjoin",
     "l29_dedup_clusters",
     "l33_dedup_apply",
-    "l61_exact_substr_spans",
-    "l61b_exact_substr_hashed",
     "l44_clean_corpus",
     "l80_keeper_election",
     "l12b_ngram_jaccard_slice",
@@ -81,11 +80,13 @@ SWEEP_HEAD: list[str] = [
     "l33b_dedup_apply_slice",
     "l44b_clean_corpus_slice",
     "l7b_simjoin_slice",
-    "l61c_substr_slice",
-    "l61d_substr_slice_hashed",
     "l55_pair_token_f1",
     "l60_incremental_neardup",
+    "l69_indexed_neardup",
+    "l75_delta_dedup",
     "l60b_neardup_slice",
+    "l69b_indexed_slice",
+    "l75b_delta_slice",
     "l55b_pair_token_f1_slice",
     "rb1_report_events",
     "rb2_report_orders",
@@ -98,19 +99,18 @@ SWEEP_HEAD: list[str] = [
     "rb15_histogram_buckets",
     "rb16_report_minmax",
     "rb17_filter_expression",
-    "s13_zorder_scan",
-    "s14_python_datasource",
-    "s15_schema_evolution",
-    "s16_corrupt_records",
-    "s17_footer_stats",
-    "s18_manifest_pruned_read",
+    "rb23_incremental_rollup",
+    "rb25_nav_pagerank",
+    "rb27_attribution",
+    "rb28_entry_paths",
+    "rb29_conversion_lag",
 ]
 
 #: Evidence horizon SWEEP_HEAD was generated from (the newest
 #: CORRECTNESS round on disk at generation time) — the invariant test
 #: re-derives the head at THIS horizon so a mid-verdict r11 sweep file
 #: doesn't invalidate it.
-SWEEP_HEAD_HORIZON = 14
+SWEEP_HEAD_HORIZON = 15
 
 # Staleness rotation: oldest driver evidence first once the head clears
 # (the r05-evidence cohort — generated as --emit-head 85's entries 51-84;

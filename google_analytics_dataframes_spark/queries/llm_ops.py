@@ -17,7 +17,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from google_analytics_dataframes_spark.io import fanout, table_fingerprint
+from google_analytics_dataframes_spark.io import fanout, session_memoized
 from google_analytics_dataframes_spark.registry import register
 from google_analytics_dataframes_spark.queries._util import T
 from google_analytics_dataframes_spark.operators import dedup as D
@@ -34,17 +34,11 @@ from google_analytics_dataframes_spark.operators import multimodal as M
 # components.  Registered independently they would re-run that chain three
 # times per sweep (~24s of the round-2 bench was this single computation
 # done thrice); a real pipeline materializes pairs/clusters once and fans
-# the cheap finishing steps out from there.  The cache key includes the
-# Spark application id (frames die with their session) and a content
-# fingerprint of documents.parquet (a regenerated dataset must never be
-# served stale pairs).  Values are `localCheckpoint`ed, so cache hits are
-# lineage-free and re-joinable at no recompute cost.
-_SRC5_CACHE: dict[tuple, object] = {}
-
-
-def _src5_key(spark, sf_dir: str, what: str) -> tuple:
-    return (what, spark.sparkContext.applicationId, sf_dir,
-            table_fingerprint(sf_dir, "documents"))
+# the cheap finishing steps out from there.  Each is memoized per session
+# and documents fingerprint (io.session_memo): frames die with their
+# session, and a regenerated dataset must never be served stale pairs.
+# Values are `localCheckpoint`ed, so memo hits are lineage-free and
+# re-joinable at no recompute cost.
 
 
 def _simjoin_stats(spark, sf_dir):
@@ -58,34 +52,26 @@ def _simjoin_stats(spark, sf_dir):
     return simjoin_token_stats(spark, sf_dir, _ASLICE_MOD, _ASLICE_RES)
 
 
+@session_memoized("documents")
 def _src5_pairs(spark, sf_dir):
     """3-gram Jaccard>=60% near-dup pairs on the src5 slice, materialized
     once per (session, dataset): columns doc_a, doc_b, inter, uni, jaccard."""
-    key = _src5_key(spark, sf_dir, "pairs")
-    df = _SRC5_CACHE.get(key)
-    if df is None:
-        docs = T(spark, sf_dir, "documents").filter(F.col("source") == "src5")
-        grams = fanout(docs).select(
-            "doc_id", F.explode(D.char_ngrams("text", 3)).alias("item")
-        )
-        df = D.jaccard_pairs(grams, threshold_pct=60, materialize=True)
-        _SRC5_CACHE[key] = df
-    return df
+    docs = T(spark, sf_dir, "documents").filter(F.col("source") == "src5")
+    grams = fanout(docs).select(
+        "doc_id", F.explode(D.char_ngrams("text", 3)).alias("item")
+    )
+    return D.jaccard_pairs(grams, threshold_pct=60, materialize=True)
 
 
+@session_memoized("documents")
 def _src5_clusters(spark, sf_dir):
     """Connected components over :func:`_src5_pairs` (doc_id, cluster_id for
     every doc that appears in some pair), materialized once per (session,
     dataset)."""
-    key = _src5_key(spark, sf_dir, "clusters")
-    df = _SRC5_CACHE.get(key)
-    if df is None:
-        pairs = _src5_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        # connected_components localCheckpoints its label table internally,
-        # so the returned frame is already cheap to re-read.
-        df = D.connected_components(pairs)
-        _SRC5_CACHE[key] = df
-    return df
+    pairs = _src5_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    # connected_components localCheckpoints its label table internally,
+    # so the returned frame is already cheap to re-read.
+    return D.connected_components(pairs)
 
 
 @register(
@@ -3563,6 +3549,7 @@ _SLICED_SRC5_PAIRS_CTE = f"""
 """
 
 
+@session_memoized("documents")
 def _src5_sliced_pairs(spark, sf_dir):
     """The sliced-pair materialization behind the src5 twins, cached per
     (session, dataset) exactly like :func:`_src5_pairs`: incoming =
@@ -3570,40 +3557,26 @@ def _src5_sliced_pairs(spark, sf_dir):
     by the adaptive cross operator; pairs kept with doc_ex > doc_in so
     each unordered pair is emitted once with its lower id first —
     matching the oracle's ``a.doc_id < b.doc_id AND a.doc_id % m = r``."""
-    key = _src5_key(spark, sf_dir, "sliced_pairs")
-    df = _SRC5_CACHE.get(key)
-    if df is None:
-        docs = T(spark, sf_dir, "documents").filter(F.col("source") == "src5")
-        grams = fanout(docs).select(
-            "doc_id", F.explode(D.char_ngrams("text", 3)).alias("item")
-        )
-        inc = grams.filter(
-            F.col("doc_id") % _ASLICE_MOD == _ASLICE_RES
-        )
-        pairs = D.jaccard_pairs_cross(inc, grams, threshold_pct=60)
-        df = (
-            pairs.filter(F.col("doc_ex") > F.col("doc_in"))
-            .select(
-                F.col("doc_in").alias("doc_a"),
-                F.col("doc_ex").alias("doc_b"),
-                "inter",
-                F.col("uni").cast("long").alias("uni"),
-            )
-        )
-        _SRC5_CACHE[key] = df
-    return df
+    docs = T(spark, sf_dir, "documents").filter(F.col("source") == "src5")
+    grams = fanout(docs).select(
+        "doc_id", F.explode(D.char_ngrams("text", 3)).alias("item")
+    )
+    inc = grams.filter(F.col("doc_id") % _ASLICE_MOD == _ASLICE_RES)
+    pairs = D.jaccard_pairs_cross(inc, grams, threshold_pct=60)
+    return pairs.filter(F.col("doc_ex") > F.col("doc_in")).select(
+        F.col("doc_in").alias("doc_a"),
+        F.col("doc_ex").alias("doc_b"),
+        "inter",
+        F.col("uni").cast("long").alias("uni"),
+    )
 
 
+@session_memoized("documents")
 def _src5_sliced_clusters(spark, sf_dir):
-    """Connected components over :func:`_src5_sliced_pairs`, cached — the
+    """Connected components over :func:`_src5_sliced_pairs`, memoized — the
     sliced twin of :func:`_src5_clusters`."""
-    key = _src5_key(spark, sf_dir, "sliced_clusters")
-    df = _SRC5_CACHE.get(key)
-    if df is None:
-        pairs = _src5_sliced_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        df = D.connected_components(pairs)
-        _SRC5_CACHE[key] = df
-    return df
+    pairs = _src5_sliced_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    return D.connected_components(pairs)
 
 
 @register(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from google_analytics_dataframes_spark.io import session_memoized
 from google_analytics_dataframes_spark.registry import register
 from google_analytics_dataframes_spark.queries._util import T, dsum, dsum_sql
 
@@ -156,32 +157,21 @@ def st3_sessionize(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# Staging-directory cache: the source directory a stream reads is FIXTURE
+# Staging-directory memo: the source directory a stream reads is FIXTURE
 # scaffolding (a real deployment reads an existing bus/landing zone), so
 # re-materializing it on every query invocation would charge the measured
-# stream a parquet write it doesn't own.  Keyed like llm_ops._SRC5_CACHE —
-# (variant, session, dataset, file fingerprint) — so a new session, a
-# different sf, or regenerated testdata re-stages; the cached dir is
-# re-validated on disk before reuse (the tmpfs sweeper only removes
-# other-process orphans, but cheap paranoia).
-_STAGE_CACHE: dict[tuple, str] = {}
-
-
-def _stage_cached(spark, sf_dir: str, variant: str):
+# stream a parquet write it doesn't own.  Each _stage_* helper is memoized
+# per session and the fingerprint of the table it stages
+# (io.session_memo), and the staged dir is re-checked on disk before reuse
+# (the tmpfs sweeper only removes other-process orphans, but cheap
+# paranoia).
+def _dir_exists(spark, d: str) -> bool:
     import os
 
-    from google_analytics_dataframes_spark.io import table_fingerprint
-
-    key = (
-        variant,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "events"),
-    )
-    d = _STAGE_CACHE.get(key)
-    return key, (d if d is not None and os.path.isdir(d) else None)
+    return os.path.isdir(d)
 
 
+@session_memoized("events", _dir_exists)
 def _stage_stream_dir(spark, sf_dir: str, ordered: bool) -> str:
     """Copy events.parquet into a directory of 4 files (FileStreamSource
     wants a directory).  ``ordered=True`` range-partitions on ts and stamps
@@ -193,9 +183,6 @@ def _stage_stream_dir(spark, sf_dir: str, ordered: bool) -> str:
     from google_analytics_dataframes_spark.io import load_table, scratch_dir
 
     tag = "ord" if ordered else "raw"
-    key, cached = _stage_cached(spark, sf_dir, f"stream_{tag}")
-    if cached is not None:
-        return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     d = scratch_dir(f"stream_{tag}_{sf_tag}")
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -211,10 +198,10 @@ def _stage_stream_dir(spark, sf_dir: str, ordered: bool) -> str:
         # 2 files -> 2 microbatches: enough to prove per-batch replanning of
         # the static side without paying 4 batch fixed costs per sweep
         ev.repartition(2).write.mode("overwrite").parquet(d)
-    _STAGE_CACHE[key] = d
     return d
 
 
+@session_memoized("events", _dir_exists)
 def _stage_stream_dir_with_replays(spark, sf_dir: str) -> str:
     """Stage events as an AT-LEAST-ONCE stream: file 1 is the complete
     table, file 2 replays every 5th event (the redelivery a real bus
@@ -226,9 +213,6 @@ def _stage_stream_dir_with_replays(spark, sf_dir: str) -> str:
 
     from google_analytics_dataframes_spark.io import load_table, scratch_dir
 
-    key, cached = _stage_cached(spark, sf_dir, "stream_dup")
-    if cached is not None:
-        return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     d = scratch_dir(f"stream_dup_{sf_tag}")
     stage = d + "_stage"
@@ -250,10 +234,10 @@ def _stage_stream_dir_with_replays(spark, sf_dir: str) -> str:
         t = 1_700_000_000 + i * 60
         os.utime(dst, (t, t))
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
     return d
 
 
+@session_memoized("events", _dir_exists)
 def _stage_stream_dir_with_flush(
     spark, sf_dir: str, n_sentinels: int = 1, sentinel_hours: tuple = None
 ) -> str:
@@ -290,11 +274,6 @@ def _stage_stream_dir_with_flush(
         sentinel_hours = tuple(2 * (s + 1) for s in range(n_sentinels))
     assert len(sentinel_hours) == n_sentinels
     hrs_tag = "_".join(str(h) for h in sentinel_hours)
-    key, cached = _stage_cached(
-        spark, sf_dir, f"stream_flush{n_sentinels}h{hrs_tag}"
-    )
-    if cached is not None:
-        return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     d = scratch_dir(f"stream_flush{n_sentinels}h{hrs_tag}_{sf_tag}")
     base = _stage_stream_dir(spark, sf_dir, ordered=True)
@@ -340,10 +319,10 @@ def _stage_stream_dir_with_flush(
         pq.write_table(table, dst)
         t = 1_700_000_000 + (len(parts) + s) * 60
         os.utime(dst, (t, t))
-    _STAGE_CACHE[key] = d
     return d
 
 
+@session_memoized("documents", _dir_exists)
 def _stage_doc_stream(spark, sf_dir: str) -> str:
     """Stage DOCUMENTS as a 2-file re-crawl stream: file 0 is the full
     corpus (doc_id, text); file 1 "re-crawls" every 7th document — same
@@ -355,9 +334,6 @@ def _stage_doc_stream(spark, sf_dir: str) -> str:
 
     from google_analytics_dataframes_spark.io import load_table, scratch_dir
 
-    key, cached = _stage_cached(spark, sf_dir, "stream_docs")
-    if cached is not None:
-        return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     d = scratch_dir(f"stream_docs_{sf_tag}")
     import shutil
@@ -380,7 +356,6 @@ def _stage_doc_stream(spark, sf_dir: str) -> str:
         t = 1_700_000_000 + i * 60
         os.utime(dst, (t, t))
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
     return d
 
 
@@ -691,6 +666,7 @@ def st16_stream_outer_join(spark, sf_dir):
     )
 
 
+@session_memoized("events", _dir_exists)
 def _stage_restart_phases(spark, sf_dir: str) -> str:
     """Stage (cached) the two RESTART phases st17 replays: phase 1 = the
     first half of events by time (ts < 2024-01-16); phase 2 = the second
@@ -701,9 +677,6 @@ def _stage_restart_phases(spark, sf_dir: str) -> str:
 
     from google_analytics_dataframes_spark.io import load_table, scratch_dir
 
-    key, cached = _stage_cached(spark, sf_dir, "restart_phases")
-    if cached is not None:
-        return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     d = scratch_dir(f"restart_phases_{sf_tag}")
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -721,7 +694,6 @@ def _stage_restart_phases(spark, sf_dir: str) -> str:
             "value",
             "props",
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, name))
-    _STAGE_CACHE[key] = d
     return d
 
 
@@ -1176,6 +1148,7 @@ def _ck(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
+@session_memoized("documents", _dir_exists)
 def _stage_change_stream(spark, sf_dir: str) -> str:
     """Stage the CDC change feed as a 2-file stream (ascending mtimes):
 
@@ -1192,9 +1165,6 @@ def _stage_change_stream(spark, sf_dir: str) -> str:
 
     from google_analytics_dataframes_spark.io import load_table, scratch_dir
 
-    key, cached = _stage_cached(spark, sf_dir, "change_stream")
-    if cached is not None:
-        return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     d = scratch_dir(f"change_stream_{sf_tag}")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1244,7 +1214,6 @@ def _stage_change_stream(spark, sf_dir: str) -> str:
         t = 1_700_000_000 + i * 60
         os.utime(dst, (t, t))
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
     return d
 
 
@@ -1350,6 +1319,7 @@ def st20_stream_cdc_apply(spark, sf_dir):
     )
 
 
+@session_memoized("events", _dir_exists)
 def _stage_stream_dir_with_late(spark, sf_dir: str) -> str:
     """Stage events as an OUT-OF-ORDER stream with an end-of-stream flush:
     file 0 carries everything except a deterministic 'late' subset
@@ -1380,9 +1350,6 @@ def _stage_stream_dir_with_late(spark, sf_dir: str) -> str:
 
     from google_analytics_dataframes_spark.io import load_table, scratch_dir
 
-    key, cached = _stage_cached(spark, sf_dir, "stream_late")
-    if cached is not None:
-        return cached
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     d = scratch_dir(f"stream_late_{sf_tag}")
     stage = d + "_stage"
@@ -1437,7 +1404,6 @@ def _stage_stream_dir_with_late(spark, sf_dir: str) -> str:
     _marker(3, "sentinel0", (hi + 2 * 3600 * 1_000_000) * 1000, "__flush__")
     _marker(4, "sentinel1", (hi + 4 * 3600 * 1_000_000) * 1000, "__flush__")
     shutil.rmtree(stage, ignore_errors=True)
-    _STAGE_CACHE[key] = d
     return d
 
 

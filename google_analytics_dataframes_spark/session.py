@@ -40,26 +40,21 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-#: Sessions (by applicationId) already configured — configure() is called
-#: by every load_table and costs ~3 ms of py4j round trips per call
-#: (~400 calls over a bench suite); nothing in the codebase mutates
-#: RUNTIME_CONFS keys mid-session (grep-verified round 15), so one
-#: application per key suffices.
-_CONFIGURED: set[str] = set()
-
-
 def configure(spark: SparkSession) -> SparkSession:
-    """Idempotently apply runtime confs to an existing session (memoized
-    per applicationId)."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _CONFIGURED:
-        return spark
-    for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:  # conf not runtime-settable on this build — skip
-            pass
-    _CONFIGURED.add(app_id)
+    """Idempotently apply runtime confs to an existing session, once per
+    application (io.session_memo): nothing in the codebase mutates
+    RUNTIME_CONFS keys mid-session, and re-applying them costs ~3 ms of
+    py4j round trips."""
+    from google_analytics_dataframes_spark.io import session_memo
+
+    def apply() -> None:
+        for k, v in RUNTIME_CONFS.items():
+            try:
+                spark.conf.set(k, v)
+            except Exception:  # conf not runtime-settable on this build — skip
+                pass
+
+    session_memo(spark, "configure", None, (), apply)
     return spark
 
 

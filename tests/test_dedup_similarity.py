@@ -640,49 +640,65 @@ def test_shipped_prefix_crossover_threshold(spark):
 
 def test_stored_cross_stats_evicts_stale_fingerprint_siblings(spark):
     """ADVICE r12: a data regeneration changes the table fingerprint and
-    creates a NEW dedup_cross_stats_* name; the writer must drop the old
-    fingerprint's catalog entries (and scratch parquet) instead of
+    creates a NEW stats table name; each stored-stats writer must drop the
+    old fingerprint's catalog entries (and scratch parquet) instead of
     leaking them forever — while KEEPING same-fingerprint siblings with
-    a different max_vocab (live caches for other callers)."""
+    other parameters (live caches for other callers).  Both writers share
+    one sweep, so each is an input here."""
     import os
 
-    from google_analytics_dataframes_spark.io import table_fingerprint
+    from google_analytics_dataframes_spark.io import (
+        clear_session_memo,
+        table_fingerprint,
+    )
     from google_analytics_dataframes_spark.sources import bucketed as B
 
     fp = table_fingerprint(SF_DIR, "documents")
     sf_tag = os.path.basename(SF_DIR.rstrip("/")).replace(".", "_")
-    # stale sibling in the writer's EXACT name format (16-hex fp, _v<int>)
-    stale = f"dedup_cross_stats_{sf_tag}_{'deadbeef' * 2}_v4096"
-    live_sibling = f"dedup_cross_stats_{sf_tag}_{fp}_v7"
-    # ADVICE r13: names that merely share the prefix but are NOT in the
-    # writer's format must survive (user tables), as must TEMPORARY views
-    # whose names collide with the pattern.
-    user_table = f"dedup_cross_stats_{sf_tag}_notmine"
-    temp_view = f"dedup_cross_stats_{sf_tag}_{'deadbeef' * 2}_v1"
-    for name in (stale, live_sibling, user_table):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.createDataFrame([(1,)], "x long").write.mode(
-            "overwrite"
-        ).saveAsTable(name)
-    spark.createDataFrame([(1,)], "x long").createOrReplaceTempView(temp_view)
-    # force a real (re)write: clear the session cache and the live table
-    B._CROSS_STATS_CACHE.clear()
-    spark.sql(f"DROP TABLE IF EXISTS dedup_cross_stats_{sf_tag}_{fp}_v4096")
-    stats = B.dedup_cross_stats(spark, SF_DIR)
-    assert stats["n_in_docs"] > 0
-    assert not spark.catalog.tableExists(stale), "stale sibling leaked"
-    assert spark.catalog.tableExists(live_sibling), (
-        "same-fingerprint sibling (different max_vocab) must survive"
-    )
-    assert spark.catalog.tableExists(user_table), (
-        "prefix-sharing user table must survive (not in writer format)"
-    )
-    assert spark.catalog.tableExists(temp_view), (
-        "pattern-colliding TEMPORARY view must survive"
-    )
-    spark.catalog.dropTempView(temp_view)
-    for name in (live_sibling, user_table):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    stale_fp = "deadbeef" * 2
+    writers = [
+        # (name prefix, live name suffix, other-parameter suffix, call,
+        #  a doc count the written stats must carry)
+        ("dedup_cross_stats", "_v4096", "_v7",
+         lambda: B.dedup_cross_stats(spark, SF_DIR), "n_in_docs"),
+        ("simjoin_stats", "_m20r5_v4096", "_m20r5_v7",
+         lambda: B.simjoin_token_stats(spark, SF_DIR, 20, 5), "n_slice_docs"),
+    ]
+    for prefix, live_suffix, other_suffix, write, n_docs in writers:
+        # stale sibling in the writer's EXACT name format (16-hex fp)
+        stale = f"{prefix}_{sf_tag}_{stale_fp}{live_suffix}"
+        live_sibling = f"{prefix}_{sf_tag}_{fp}{other_suffix}"
+        # ADVICE r13: names that merely share the prefix but are NOT in
+        # the writer's format must survive (user tables), as must
+        # TEMPORARY views whose names collide with the pattern.
+        user_table = f"{prefix}_{sf_tag}_notmine"
+        temp_view = f"{prefix}_{sf_tag}_{stale_fp}{other_suffix}"
+        for name in (stale, live_sibling, user_table):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            spark.createDataFrame([(1,)], "x long").write.mode(
+                "overwrite"
+            ).saveAsTable(name)
+        spark.createDataFrame([(1,)], "x long").createOrReplaceTempView(
+            temp_view
+        )
+        # force a real (re)write: forget the memo and drop the live table
+        clear_session_memo()
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{sf_tag}_{fp}{live_suffix}")
+        stats = write()
+        assert stats[n_docs] > 0, prefix
+        assert not spark.catalog.tableExists(stale), f"{prefix}: stale sibling leaked"
+        assert spark.catalog.tableExists(live_sibling), (
+            f"{prefix}: same-fingerprint sibling (other parameters) must survive"
+        )
+        assert spark.catalog.tableExists(user_table), (
+            f"{prefix}: prefix-sharing user table must survive (not in writer format)"
+        )
+        assert spark.catalog.tableExists(temp_view), (
+            f"{prefix}: pattern-colliding TEMPORARY view must survive"
+        )
+        spark.catalog.dropTempView(temp_view)
+        for name in (live_sibling, user_table):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_simjoin_token_stats_match_direct_probe(spark):
@@ -691,10 +707,11 @@ def test_simjoin_token_stats_match_direct_probe(spark):
     same tokenizer, same counts — and serving them must not change the
     emitted pair set (the whole point is skipping the probes, not
     re-deriving different routing inputs)."""
+    from google_analytics_dataframes_spark.io import clear_session_memo
     from google_analytics_dataframes_spark.sources import bucketed as B
 
     mod, res = 20, 5
-    B._SIMJOIN_STATS_CACHE.clear()
+    clear_session_memo()
     stats = B.simjoin_token_stats(spark, SF_DIR, mod, res)
     toks = (
         load_table(spark, SF_DIR, "documents")
